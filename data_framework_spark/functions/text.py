@@ -16,6 +16,8 @@ identical thing).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -185,6 +187,7 @@ WINNOW_K = 5
 WINNOW_W = 8
 
 
+@functools.cache
 def _make_winnow_udf(k: int, w: int):
     """Per-batch winnowing kernel: md5 hex-prefix gram hashes
     (hashlib == Spark md5 == DuckDB md5, bit-identical), sliding
@@ -235,16 +238,10 @@ def _make_winnow_udf(k: int, w: int):
     )(winnow)
 
 
-_WINNOW_UDF_CACHE: list = []
-
-
 def _winnow_udf(col):
-    """Lazy singleton: the pandas_udf return-type DDL can only be
-    parsed once a SparkSession exists, so the udf is built on first
-    use, not at import."""
-    if not _WINNOW_UDF_CACHE:
-        _WINNOW_UDF_CACHE.append(_make_winnow_udf(WINNOW_K, WINNOW_W))
-    return _WINNOW_UDF_CACHE[0](col)
+    """Built on first use, not at import: the pandas_udf return-type
+    DDL can only be parsed once a SparkSession exists."""
+    return _make_winnow_udf(WINNOW_K, WINNOW_W)(col)
 
 
 def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,7 +17,6 @@ proving layout changes semantics not at all and shuffles entirely.
 
 from __future__ import annotations
 
-import atexit
 import hashlib
 import os
 import shutil
@@ -26,32 +25,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_framework_spark import cache
 from data_framework_spark.sources.tables import load_table
-
-_BUCKETED_READY: dict[tuple[str, int], tuple[str, str]] = {}
-
-
-@atexit.register
-def _cleanup_scratch_dirs() -> None:
-    """Remove this process's bucketed scratch dirs on exit. The dirs
-    are PID-suffixed (no cross-process races by construction), so
-    without this hook every bench/pytest run would orphan one
-    /tmp/bucketed_<tag>_<pid> per (sf_dir, buckets) on long-lived
-    machines (round-4 advisory)."""
-    # OWN dirs only. A dead-PID sweep was considered and rejected:
-    # with /tmp shared across PID namespaces (containers), a PID that
-    # is invisible here can still be a live process elsewhere, and
-    # deleting its dir would rip the parquet files out from under its
-    # live external tables — the exact race the PID suffix prevents.
-    suffix = f"_{os.getpid()}"
-    tmp = tempfile.gettempdir()
-    try:
-        entries = os.listdir(tmp)
-    except OSError:
-        return
-    for d in entries:
-        if d.startswith("bucketed_") and d.endswith(suffix):
-            shutil.rmtree(os.path.join(tmp, d), ignore_errors=True)
 
 
 def bucketed_tables(
@@ -61,33 +36,44 @@ def bucketed_tables(
     the two table names. One-time cost per session, amortized over
     every subsequent orderkey join (exactly the production trade).
 
-    The memo is validated against the ACTIVE session's catalog AND the
-    on-disk data directory: a cached name from a stopped-and-recreated
-    SparkSession, or a path cleaned externally, is re-materialized
-    instead of returned stale. The tag is md5-derived from
-    (sf_dir, n_buckets) plus the PID: deterministic within a process
-    (repeated runs reuse one directory instead of accumulating
-    mkdtemps) but private across processes, so two concurrent
-    benchmarks can't rmtree the parquet files backing each other's
-    live external tables."""
-    key = (sf_dir, n_buckets)
+    Session-cached per (sf_dir content, n_buckets) (cache.py, family
+    "bucketed"), and a hit is validated against the ACTIVE session's
+    catalog AND the on-disk data directory: a table dropped from the
+    catalog, or a path cleaned externally, is re-materialized instead
+    of returned stale. The tag is md5-derived from (sf_dir, n_buckets)
+    plus the PID: deterministic within a process (repeated runs reuse
+    one directory instead of accumulating mkdtemps) but private across
+    processes, so two concurrent benchmarks can't rmtree the parquet
+    files backing each other's live external tables. The directory is
+    removed at process exit (own dirs only: with /tmp shared across
+    PID namespaces, a PID invisible here can still be a live process
+    elsewhere)."""
     tag = hashlib.md5(f"{sf_dir}|{n_buckets}".encode()).hexdigest()[:10]
     base = os.path.join(
         tempfile.gettempdir(), f"bucketed_{tag}_{os.getpid()}"
     )
-    if key in _BUCKETED_READY:
-        li_cached, ord_cached = _BUCKETED_READY[key]
-        if (
-            spark.catalog.tableExists(li_cached)
-            and spark.catalog.tableExists(ord_cached)
+
+    def ready(names: tuple[str, str]) -> bool:
+        return (
+            spark.catalog.tableExists(names[0])
+            and spark.catalog.tableExists(names[1])
             and os.path.isdir(os.path.join(base, "lineitem"))
             and os.path.isdir(os.path.join(base, "orders"))
-        ):
-            return _BUCKETED_READY[key]
-        del _BUCKETED_READY[key]  # stale session/catalog/files — rebuild
+        )
+
+    return cache.get_or_build(
+        spark, "bucketed", sf_dir, n_buckets,
+        lambda: _write_bucketed(spark, sf_dir, n_buckets, tag, base),
+        valid=ready,
+    )
+
+
+def _write_bucketed(
+    spark: SparkSession, sf_dir: str, n_buckets: int, tag: str, base: str
+) -> tuple[str, str]:
     if os.path.exists(base):
         shutil.rmtree(base)  # replace: the catalog entry is gone/stale
-    os.makedirs(base)
+    os.makedirs(cache.track_dir(base))
     li_name, ord_name = f"li_bkt_{tag}", f"ord_bkt_{tag}"
     for name in (li_name, ord_name):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -109,7 +95,6 @@ def bucketed_tables(
         .option("path", os.path.join(base, "orders"))
         .saveAsTable(ord_name)
     )
-    _BUCKETED_READY[key] = (li_name, ord_name)
     return li_name, ord_name
 
 

@@ -57,6 +57,7 @@ ncells ~ sqrt(N) growth.
 from __future__ import annotations
 
 import math
+import os
 
 from typing import Iterator
 
@@ -66,6 +67,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from data_framework_spark import cache
 from data_framework_spark.similarity.ivf import (
     _centroid_rows,
     _rounded_centroid_cosines,
@@ -195,6 +197,9 @@ def ivfpq_index_write(
     )
 
     spark = emb.sparkSession
+    # a search after this write must load the new components, not the
+    # session-cached ones of the index previously at this path
+    cache.invalidate("ivfpq_index", key=os.path.abspath(path))
     cents = lloyd_coarse_centroids(
         emb, _centroid_rows(emb, ncells), train.COARSE_ROUNDS
     )
@@ -243,29 +248,21 @@ def ivfpq_index_write(
         res.unpersist()
 
 
-# (applicationId, index path) -> (cents, books). The path is
-# CONTENT-ADDRESSED (persistent_index_dir folds the data fingerprint,
-# build knobs and builder-source hash into the directory name), so a
-# stale entry is unreachable by construction — any change moves the
-# path. This caches the bounded driver-side components (ncells
-# centroid rows + PQ_M·PQ_K codebook rows) once per session, the same
-# load-once posture production index serving has; the per-query ADC
-# work (query collect, LUT build, codes scan, scoring plan) is NOT
-# cached and re-executes every call (r18, VERDICT item 10 — the
-# repeated 2-collect reload was ~0.2 s of driver job latency on every
-# ivfpq-family query).
-_INDEX_COMPONENTS: dict[tuple[str, str], tuple] = {}
-
-
 def _load_index_driver_side(spark: SparkSession, path: str):
     """(cents, books): the two bounded index components every search
-    needs driver-side — session-cached per content-addressed path."""
-    key = (spark.sparkContext.applicationId, path)
-    hit = _INDEX_COMPONENTS.get(key)
-    if hit is not None:
-        return hit
-    for k in [k for k in _INDEX_COMPONENTS if k[0] != key[0]]:
-        del _INDEX_COMPONENTS[k]  # dead sessions' entries
+    needs driver-side (ncells centroid rows + PQ_M·PQ_K codebook rows),
+    loaded once per session per index path (cache.py, family
+    "ivfpq_index") — the load-once posture production index serving
+    has; the per-query ADC work (query collect, LUT build, codes scan,
+    scoring plan) is NOT cached and re-executes every call.
+    ivfpq_index_write invalidates the entry for the path it writes."""
+    return cache.get_or_build(
+        spark, "ivfpq_index", None, os.path.abspath(path),
+        lambda: _read_index_driver_side(spark, path),
+    )
+
+
+def _read_index_driver_side(spark: SparkSession, path: str):
     cent_rows = (
         spark.read.parquet(f"{path}/centroids").orderBy("cid").collect()
     )
@@ -291,7 +288,6 @@ def _load_index_driver_side(spark: SparkSession, path: str):
     books = np.zeros((PQ_M, kk, _SUB), dtype=np.float64)
     for r in book_rows:
         books[r["subspace"], r["code"]] = [float(x) for x in r["vec"]]
-    _INDEX_COMPONENTS[key] = (cents, books)
     return cents, books
 
 

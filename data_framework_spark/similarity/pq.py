@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_framework_spark import cache
 from data_framework_spark.sources.tables import load_table
 
 PQ_M = 8  # subspaces
@@ -94,54 +95,55 @@ def _codebooks(emb: DataFrame) -> np.ndarray:
     )
 
 
-# Trained-codebook session cache: one training run per (session,
-# corpus content) shared by q_pq_codes and q_pq_adc_topk — the BPE
-# _MERGE_CACHE contract (the tokenizer/codebook IS a build artifact;
-# retraining it inside every consuming query is the anti-pattern the
-# cache removes). Keyed on the source fingerprint so a mid-session
-# rewrite retrains. The value is a driver-tiny (8, 256, 8) ndarray.
-_BOOKS_CACHE: dict[tuple, np.ndarray] = {}
-
-
 def trained_codebooks(emb: DataFrame) -> np.ndarray:
     """Lloyd-trained codebooks: the sampled seeds refined by
     train.BOOK_ROUNDS of per-subspace fixed-point k-means over the raw
-    corpus (bit-identical to the oracle's unrolled CTEs).
-    Session-cached per (corpus fingerprint, analyzed-plan semantic
-    hash): inputFiles() alone is identical for ANY frame derived from
-    the same file, so a filtered/projected view would silently serve —
-    or poison — full-corpus codebooks (round-10 advisory). The
-    semanticHash term makes derived frames distinct cache entries
-    while the registry's identical `load_table` plans still share one
-    training run; multi-file and non-file frames retrain every call."""
-    import os
+    corpus (bit-identical to the oracle's unrolled CTEs). One training
+    run per (session, corpus content) is shared by q_pq_codes and
+    q_pq_adc_topk (the codebook IS a build artifact): session-cached
+    (cache.py, family "pq_books") on the source file's fingerprint and
+    the analyzed plan's semantic hash. inputFiles() alone is identical
+    for ANY frame derived from the same file, so a filtered/projected
+    view would silently serve — or poison — full-corpus codebooks; the
+    semanticHash term makes derived frames distinct cache entries while
+    the registry's identical `load_table` plans still share one
+    training run. Multi-file and non-file frames retrain every call."""
     from urllib.parse import urlparse
 
-    from data_framework_spark.similarity.train import lloyd_subspace_books
-
-    spark = emb.sparkSession
     files = emb.inputFiles()
     if len(files) != 1:
-        return lloyd_subspace_books(emb, "embedding", _codebooks(emb))
+        return _train_books(emb)
     local = urlparse(files[0]).path or files[0]
+    return cache.get_or_build(
+        emb.sparkSession, "pq_books", local, emb.semanticHash(),
+        lambda: _reload_or_train_books(emb, local),
+    )
+
+
+def _train_books(emb: DataFrame) -> np.ndarray:
+    from data_framework_spark.similarity.train import lloyd_subspace_books
+
+    return lloyd_subspace_books(emb, "embedding", _codebooks(emb))
+
+
+def _reload_or_train_books(emb: DataFrame, local: str) -> np.ndarray:
+    """The codebook persisted by a previous session for this exact
+    (source stamp, plan), else a fresh training run persisted for the
+    next one. A vanished source file retrains without persisting."""
+    import os
+
     try:
         st = os.stat(local)
-        stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
-        return lloyd_subspace_books(emb, "embedding", _codebooks(emb))
-    app = spark.sparkContext.applicationId
-    key = (app, local, stamp, emb.semanticHash())
-    for k in [k for k in _BOOKS_CACHE if k[0] != app]:
-        del _BOOKS_CACHE[k]
-    got = _BOOKS_CACHE.get(key)
-    plan_fp = _stable_plan_fp(emb) if got is None else None
-    if got is None and plan_fp is not None:
-        got = _load_persisted_books(local, stamp, plan_fp)
+        return _train_books(emb)
+    stamp = (st.st_mtime_ns, st.st_size)
+    plan_fp = _stable_plan_fp(emb)
+    if plan_fp is None:
+        return _train_books(emb)
+    got = _load_persisted_books(local, stamp, plan_fp)
     if got is None:
-        got = lloyd_subspace_books(emb, "embedding", _codebooks(emb))
-        if plan_fp is not None:
-            _persist_books(local, stamp, plan_fp, got)
-    _BOOKS_CACHE[key] = got
+        got = _train_books(emb)
+        _persist_books(local, stamp, plan_fp, got)
     return got
 
 
@@ -220,10 +222,10 @@ def _load_persisted_books(
     exact source stamp + plan + training knobs)."""
     import os
 
-    from data_framework_spark.sources.formats import _index_cache_root
-
     pd_, cd = _books_digests(local, stamp, plan_fp)
-    path = os.path.join(_index_cache_root(), f"pq_books2_{pd_}_{cd}.npy")
+    path = os.path.join(
+        cache._index_cache_root(), f"pq_books2_{pd_}_{cd}.npy"
+    )
     try:
         books = np.load(path)
     except (OSError, ValueError):
@@ -244,10 +246,8 @@ def _persist_books(
     import glob
     import os
 
-    from data_framework_spark.sources.formats import _index_cache_root
-
     pd_, cd = _books_digests(local, stamp, plan_fp)
-    root = _index_cache_root()
+    root = cache._index_cache_root()
     try:
         os.makedirs(root, exist_ok=True)
         final = os.path.join(root, f"pq_books2_{pd_}_{cd}.npy")

@@ -16,115 +16,17 @@ hash.
 
 from __future__ import annotations
 
-import atexit
 import hashlib
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_framework_spark import cache
 from data_framework_spark.functions.sampling import HASH_FRACTION_SQL_TMPL
 from data_framework_spark.sources.tables import load_table
-
-_SCRATCH_DIRS: list[str] = []
-
-
-def _scratch_dir(prefix: str) -> str:
-    """mkdtemp tracked for removal at process exit — the roundtrip
-    queries each materialize a temp sink, and long-lived machines
-    otherwise accumulate one orphan per query per run."""
-    d = tempfile.mkdtemp(prefix=prefix)
-    _SCRATCH_DIRS.append(d)
-    return d
-
-
-@atexit.register
-def _cleanup_scratch_dirs() -> None:
-    for d in _SCRATCH_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-# Session-scoped registry of built on-disk indexes, shared by every
-# persistable-index query (IVF inverted lists, IVF-PQ code lists, BM25
-# postings): ONE copy of the prune/build/reuse convention instead of a
-# divergence-prone copy per module. The first call in a session builds
-# + writes (bench cold = build + reload + search); later calls reload
-# only (bench warm = reload + search) — the rebuild-vs-reload split
-# the index story is about. Keyed by (applicationId, sf_dir, prefix,
-# source fingerprint): the fingerprint — (relpath, mtime_ns, size) of
-# every parquet file under sf_dir — invalidates the entry if the data
-# at the same path is rewritten mid-session, so a caller reusing a
-# directory can never be served a stale BM25/IVF/IVF-PQ index with
-# wrong-but-plausible results (round-8 advisory). Entries from stopped
-# sessions are pruned on every call so a long-lived process never
-# reuses a stale path.
-_INDEX_DIRS: dict[tuple[str, str, str, tuple], str] = {}
-
-
-def _sf_fingerprint(sf_dir: str) -> tuple:
-    """Cheap content fingerprint of a data directory: sorted
-    (relpath, mtime_ns, size) over its parquet files (one os.walk,
-    no data read). A file that vanishes between the walk and the stat
-    (a concurrent overwrite-mode rewrite — exactly the scenario the
-    fingerprint exists for) is skipped rather than crashing: the
-    changed fingerprint then triggers the rebuild (round-9 review)."""
-    out = []
-    for root, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                p = os.path.join(root, f)
-                try:
-                    st = os.stat(p)
-                except OSError:
-                    continue
-                out.append(
-                    (os.path.relpath(p, sf_dir), st.st_mtime_ns, st.st_size)
-                )
-    return tuple(sorted(out))
-
-
-def session_index_dir(spark, sf_dir: str, prefix: str, build) -> str:
-    """Return the on-disk index dir for (session, sf_dir, prefix),
-    invoking `build(path)` exactly once per session per source-data
-    fingerprint to create it. A fingerprint change EVICTS the
-    superseded entry and deletes its on-disk index (the stale index
-    must not be served, and N mid-session rewrites must not hoard N
-    dead index trees until process exit — round-9 review); a caller
-    holding an unmaterialized frame over the stale index loses it,
-    which is the correct failure for a frame whose source data was
-    rewritten underneath it."""
-    app = spark.sparkContext.applicationId
-    for key in [k for k in _INDEX_DIRS if k[0] != app]:
-        del _INDEX_DIRS[key]
-    key = (app, sf_dir, prefix, _sf_fingerprint(sf_dir))
-    if key not in _INDEX_DIRS:
-        for old in [
-            k
-            for k in _INDEX_DIRS
-            if k[:3] == (app, sf_dir, prefix) and k != key
-        ]:
-            stale = _INDEX_DIRS.pop(old)
-            shutil.rmtree(stale, ignore_errors=True)
-            if stale in _SCRATCH_DIRS:
-                _SCRATCH_DIRS.remove(stale)
-        path = _scratch_dir(prefix)
-        build(path)
-        _INDEX_DIRS[key] = path
-    return _INDEX_DIRS[key]
-
-
-INDEX_CACHE_ENV = "SPARK_GRAFT_INDEX_CACHE"
-
-
-def _index_cache_root() -> str:
-    """Root of the cross-session index cache (tests redirect it via
-    the SPARK_GRAFT_INDEX_CACHE env var)."""
-    return os.environ.get(INDEX_CACHE_ENV) or os.path.join(
-        tempfile.gettempdir(), "spark_graft_index_cache"
-    )
 
 
 def build_source_fp(*objs) -> str:
@@ -223,13 +125,13 @@ def _manifest_ok(index_dir: str, digest: str) -> bool:
 def persistent_index_dir(
     spark, sf_dir: str, prefix: str, build, params: dict
 ) -> str:
-    """session_index_dir's cross-SESSION sibling: the built index
-    survives process exit under a content-addressed directory —
+    """The on-disk index dir for (sf_dir, prefix, params), built at
+    most once ACROSS sessions: the built index survives process exit
+    under a content-addressed directory —
     `<cache_root>/<prefix><sha256(sf_dir, fingerprint, params)[:20]>`
-    — and a fresh session RELOADS it instead of re-training (round-13
-    verdict: the IVFPQ session-first-call Lloyd retrain was the only
-    structurally growing cost in the suite; production index serving
-    reloads a persisted index, it does not retrain per session).
+    — and a fresh session RELOADS it instead of re-training
+    (production index serving reloads a persisted index, it does not
+    retrain per session).
 
     Safety is the digest: `params` must name every build-affecting
     knob (cell counts, Lloyd rounds, codebook sizes, plus a fmt
@@ -237,67 +139,55 @@ def persistent_index_dir(
     don't capture), and the digest additionally folds in
     build_source_fp(build) — the source hash of the build callable's
     defining module — so even a FORGOTTEN fmt bump cannot serve a
-    stale artifact after a build-code change (r14 verdict ask 3). A
-    knob, build-code, or source-data change diverges the digest, so a
-    stale index is unreachable; superseded directories for the same
-    (prefix, sf_dir) are deleted before the new build publishes (the
-    session_index_dir eviction convention — N rewrites must not
-    hoard N dead index trees). Publication is build-into-tmp +
-    atomic os.rename, so a reader never sees a half-written index;
-    losing the rename race adopts the winner's identical directory.
-    Built (and reloaded) entries are also registered in the session
-    registry so get_index_dir reflects them.
+    stale artifact after a build-code change. A knob, build-code, or
+    source-data change diverges the digest, so a stale index is
+    unreachable; superseded directories for the same (prefix, sf_dir)
+    are deleted before the new build publishes (N rewrites must not
+    hoard N dead index trees). Publication is build-into-tmp + atomic
+    os.rename, so a reader never sees a half-written index; losing the
+    rename race adopts the winner's identical directory. The resolved
+    directory is recorded in the session cache so get_index_dir
+    reflects it; a recorded directory is served only while it is this
+    call's digest path and its manifest still matches.
 
-    Concurrency (r14 advisory): the cache root assumes ONE writer
-    code-version per root at a time. Eviction + publish run under an
-    advisory flock per prefix, so two concurrent same-version
-    processes serialize their builds instead of clobbering each
-    other's tmp/publish; but a process running DIFFERENT code or
-    params can still evict a directory another live session already
-    resolved and is lazily reading (Spark scans hold no lock) —
-    point concurrent divergent-version runs at separate roots via
+    Concurrency: the cache root assumes ONE writer code-version per
+    root at a time. Eviction + publish run under an advisory flock per
+    prefix, so two concurrent same-version processes serialize their
+    builds instead of clobbering each other's tmp/publish; but a
+    process running DIFFERENT code or params can still evict a
+    directory another live session already resolved and is lazily
+    reading (Spark scans hold no lock) — point concurrent
+    divergent-version runs at separate roots via
     SPARK_GRAFT_INDEX_CACHE."""
-    app = spark.sparkContext.applicationId
-    for key in [k for k in _INDEX_DIRS if k[0] != app]:
-        del _INDEX_DIRS[key]
     sf_abs = os.path.abspath(sf_dir)
-    fp = _sf_fingerprint(sf_dir)
     digest = hashlib.sha256(
         json.dumps(
             {
                 "sf_dir": sf_abs,
-                "fingerprint": fp,
+                "fingerprint": cache._sf_fingerprint(sf_dir),
                 "params": {**params, "build_src": build_source_fp(build)},
             },
             sort_keys=True,
         ).encode()
     ).hexdigest()[:20]
-    key = (app, sf_dir, prefix, fp)
-    got = _INDEX_DIRS.get(key)
-    # the session registry key omits params (get_index_dir's 4-tuple
-    # contract), so the fast path validates the manifest DIGEST: a
-    # same-prefix call with different params in one session must miss
-    # here and resolve its own directory, never be served this one
-    if got and _manifest_ok(got, digest):
-        return got
-    root = _index_cache_root()
-    os.makedirs(root, exist_ok=True)
+    root = cache._index_cache_root()
     final = os.path.join(root, prefix + digest)
-    if not _manifest_ok(final, digest):
-        with _prefix_lock(root, prefix):
-            _evict_and_build(root, prefix, digest, final, sf_abs, params, build)
-    # register stale-entry eviction + get_index_dir visibility exactly
-    # like the session path (a fingerprint change pops the old key and
-    # rmtrees its directory — correct for persisted indexes too)
-    for old in [
-        k for k in _INDEX_DIRS if k[:3] == (app, sf_dir, prefix) and k != key
-    ]:
-        stale = _INDEX_DIRS.pop(old)
-        shutil.rmtree(stale, ignore_errors=True)
-        if stale in _SCRATCH_DIRS:
-            _SCRATCH_DIRS.remove(stale)
-    _INDEX_DIRS[key] = final
-    return final
+
+    def resolve() -> str:
+        os.makedirs(root, exist_ok=True)
+        if not _manifest_ok(final, digest):
+            with _prefix_lock(root, prefix):
+                _evict_and_build(
+                    root, prefix, digest, final, sf_abs, params, build
+                )
+        return final
+
+    # the fingerprint is in the digest, so the entry is keyed without
+    # one (no second walk of sf_dir) and revalidated on every hit
+    return cache.get_or_build(
+        spark, "index_dir", None, (sf_dir, prefix), resolve,
+        valid=lambda d: d == final and _manifest_ok(d, digest),
+    )
 
 
 def _prefix_lock(root: str, prefix: str):
@@ -382,15 +272,9 @@ def _evict_and_build(
 
 
 def get_index_dir(spark, sf_dir: str, prefix: str) -> str | None:
-    """The already-built index dir, or None — test/introspection hook."""
-    return _INDEX_DIRS.get(
-        (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            prefix,
-            _sf_fingerprint(sf_dir),
-        )
-    )
+    """The index dir last resolved for (session, sf_dir, prefix), or
+    None — test/introspection hook."""
+    return cache.peek(spark, "index_dir", None, (sf_dir, prefix))
 
 
 def write_csv(df: DataFrame, path: str) -> None:
@@ -416,7 +300,7 @@ def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle computed from the original parquet."""
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
-    tmp = _scratch_dir("fmt_roundtrip_")
+    tmp = cache.scratch_dir("fmt_roundtrip_")
     write_csv(nation, f"{tmp}/nation_csv")
     write_json(region, f"{tmp}/region_json")
     n2 = read_csv(spark, f"{tmp}/nation_csv", nation.schema)
@@ -449,7 +333,7 @@ def q_partitioned_prune_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle aggregates the same slice of the original table, so a row
     lost or duplicated by the partitioned write breaks the hash."""
     docs = load_table(spark, sf_dir, "documents")
-    tmp = _scratch_dir("part_roundtrip_")
+    tmp = cache.scratch_dir("part_roundtrip_")
     (
         docs.write.mode("overwrite")
         .partitionBy("source")
@@ -485,7 +369,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the hash. Avro was probed and is NOT available in this
     build (external spark-avro module, not installable here)."""
     orders = load_table(spark, sf_dir, "orders")
-    tmp = _scratch_dir("orc_roundtrip_")
+    tmp = cache.scratch_dir("orc_roundtrip_")
     orders.write.mode("overwrite").orc(f"{tmp}/orders_orc")
     back = spark.read.orc(f"{tmp}/orders_orc")
     return (
@@ -550,7 +434,7 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches."""
     import os
 
-    tmp = _scratch_dir("compact_roundtrip_")
+    tmp = cache.scratch_dir("compact_roundtrip_")
     frag_dir, out_dir = os.path.join(tmp, "frag"), os.path.join(tmp, "compact")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(64).write.mode("overwrite").parquet(frag_dir)
@@ -645,7 +529,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     snap_b = edited.unionByName(added)
 
-    tmp = _scratch_dir("snapshot_b_")
+    tmp = cache.scratch_dir("snapshot_b_")
     b_path = os.path.join(tmp, "documents_v2")
     snap_b.write.mode("overwrite").parquet(b_path)
     b = (

@@ -2,7 +2,7 @@
 
 The five round-9 ADVICE closures:
 - tzset opt-out (`SPARK_GRAFT_NO_TZSET`)
-- `_ROUTE_CACHE` keyed on the source fingerprint (mid-session rewrite
+- the route cache keyed on the source fingerprint (mid-session rewrite
   cannot serve a stale route result)
 - `widen_scan` allowlist matches node names EXACTLY, not by prefix
 - `top_token_ratio` yields NULL (not NaN) on an empty token array
@@ -68,11 +68,8 @@ def test_pin_process_utc_sets_utc_by_default(monkeypatch):
 
 
 def test_route_cache_evicts_on_source_rewrite(spark, sf_dir, tmp_path):
-    from data_framework_spark.similarity.ann import (
-        _ROUTE_CACHE,
-        cached_route,
-    )
-    from data_framework_spark.sources.formats import _sf_fingerprint
+    from data_framework_spark import cache
+    from data_framework_spark.similarity.ann import cached_route
 
     work = tmp_path / "sf"
     shutil.copytree(sf_dir, work)
@@ -92,25 +89,24 @@ def test_route_cache_evicts_on_source_rewrite(spark, sf_dir, tmp_path):
     # same fingerprint -> dict hit, no rebuild
     df1b = cached_route(spark, wdir, "t10_route", build)
     assert df1b is df1 and builds == [1]
-    fp1 = _sf_fingerprint(wdir)
+    fp1 = cache._sf_fingerprint(wdir)
     # rewrite the source dir: touch a parquet file's mtime/size
     victim = next(work.glob("*.parquet"))
     with open(victim, "ab") as fh:
         fh.write(b"\x00")
-    fp2 = _sf_fingerprint(wdir)
+    fp2 = cache._sf_fingerprint(wdir)
     assert fp2 != fp1
     df2 = cached_route(spark, wdir, "t10_route", build)
     assert builds == [1, 1]  # rebuilt, not served stale
     assert df2 is not df1
     assert not df1.storageLevel.useMemory  # stale entry unpersisted
-    app = spark.sparkContext.applicationId
-    from data_framework_spark.sources.formats import _index_cache_root
-
-    root = _index_cache_root()
-    assert (app, wdir, fp1, "t10_route", root) not in _ROUTE_CACHE
-    assert (app, wdir, fp2, "t10_route", root) in _ROUTE_CACHE
+    key = ("t10_route", cache._index_cache_root())
+    # the fp1 entry is gone; the fp2 entry is the one served
+    assert all(v is not df1 for v in cache.entries("route"))
+    assert cache.peek(spark, "route", wdir, key) is df2
     # cleanup so later tests see no leftover persisted frames
-    _ROUTE_CACHE.pop((app, wdir, fp2, "t10_route", root)).unpersist()
+    cache.invalidate("route", wdir, key)
+    assert not df2.storageLevel.useMemory
 
 
 # --- widen_scan exact node-name matching ------------------------------------
@@ -369,18 +365,16 @@ def test_trained_codebooks_session_cache(spark, sf_dir, tmp_path):
 
     import numpy as np
 
-    from data_framework_spark.similarity.pq import (
-        _BOOKS_CACHE,
-        trained_codebooks,
-    )
+    from data_framework_spark import cache
+    from data_framework_spark.similarity.pq import trained_codebooks
     from data_framework_spark.sources.tables import load_table
 
     work = tmp_path / "sf"
     shutil.copytree(sf_dir, work)
     emb = load_table(spark, str(work), "embeddings")
-    before = len(_BOOKS_CACHE)
+    before = len(cache.entries("pq_books"))
     b1 = trained_codebooks(emb)
-    assert len(_BOOKS_CACHE) == before + 1
+    assert len(cache.entries("pq_books")) == before + 1
     b2 = trained_codebooks(load_table(spark, str(work), "embeddings"))
     assert b2 is b1  # dict hit, not a retrain
     os.utime(work / "embeddings.parquet")  # mtime bump = rewrite signal

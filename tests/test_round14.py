@@ -13,43 +13,40 @@ import shutil
 
 import pytest
 
+from data_framework_spark import cache
 from tests.conftest import SF_SMALL
 
 
 @pytest.fixture()
 def cache_root(tmp_path, monkeypatch):
     """Redirect the persistent index cache to a throwaway root and
-    drop any session-registry entries for the test prefixes, so each
-    test observes build-vs-reload from a clean slate."""
-    from data_framework_spark.sources import formats
-
+    drop the session's index-dir entries, so each test observes
+    build-vs-reload from a clean slate."""
     root = tmp_path / "index_cache"
-    monkeypatch.setenv(formats.INDEX_CACHE_ENV, str(root))
-    _forget_session_entries("r14unit_")
-    from data_framework_spark.similarity.ivfpq import IVFPQ_INDEX_PREFIX
-
-    _forget_session_entries(IVFPQ_INDEX_PREFIX)
+    monkeypatch.setenv(cache.INDEX_CACHE_ENV, str(root))
+    _forget_session_entries()
     yield str(root)
-    _forget_session_entries("r14unit_")
-    _forget_session_entries(IVFPQ_INDEX_PREFIX)
+    _forget_session_entries()
 
 
-def _forget_session_entries(prefix: str) -> None:
-    """Simulate a fresh session's empty index registry for `prefix`
-    (the applicationId can't change within a test session, but the
+def _forget_session_entries() -> None:
+    """Simulate a fresh session's empty index registry (the
+    applicationId can't change within a test session, but the
     reload-vs-retrain decision lives entirely in the on-disk cache —
-    dropping the in-memory entry forces the persistent-path lookup a
+    dropping the in-memory entries forces the persistent-path lookup a
     fresh session would perform)."""
-    from data_framework_spark.sources.formats import _INDEX_DIRS
-
-    for k in [k for k in _INDEX_DIRS if k[2] == prefix]:
-        del _INDEX_DIRS[k]
+    cache.invalidate("index_dir")
 
 
 def test_persistent_index_builds_once_across_sessions(spark, cache_root):
-    """Second 'session' (cleared registry, same data, same params)
-    must RELOAD: zero additional build calls, same directory."""
-    from data_framework_spark.sources.formats import persistent_index_dir
+    """Within a session the index is built once and get_index_dir
+    reflects it (only for the sf_dir it was built for); a second
+    'session' (cleared registry, same data, same params) must RELOAD:
+    zero additional build calls, same directory."""
+    from data_framework_spark.sources.formats import (
+        get_index_dir,
+        persistent_index_dir,
+    )
 
     builds = []
 
@@ -64,8 +61,14 @@ def test_persistent_index_builds_once_across_sessions(spark, cache_root):
     assert builds == [f"{p1}.build-{os.getpid()}"]
     assert os.path.isfile(os.path.join(p1, "payload.txt"))
     assert os.path.isfile(os.path.join(p1, "manifest.json"))
+    p1b = persistent_index_dir(
+        spark, SF_SMALL, "r14unit_", build, params={"fmt": 1, "k": 4}
+    )
+    assert p1b == p1 and len(builds) == 1  # build-once per session
+    assert get_index_dir(spark, SF_SMALL, "r14unit_") == p1
+    assert get_index_dir(spark, "/tmp/other_sf", "r14unit_") is None
 
-    _forget_session_entries("r14unit_")
+    _forget_session_entries()
     p2 = persistent_index_dir(
         spark, SF_SMALL, "r14unit_", build, params={"fmt": 1, "k": 4}
     )
@@ -84,7 +87,7 @@ def test_persistent_index_param_change_diverges_digest(spark, cache_root):
         spark, SF_SMALL, "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1, "ncells": 16},
     )
-    _forget_session_entries("r14unit_")
+    _forget_session_entries()
     p2 = persistent_index_dir(
         spark, SF_SMALL, "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1, "ncells": 32},
@@ -97,10 +100,13 @@ def test_persistent_index_param_change_diverges_digest(spark, cache_root):
 
 def test_persistent_index_source_rewrite_rebuilds(spark, cache_root, tmp_path):
     """Rewriting a source parquet under the same path must diverge
-    the fingerprint → rebuild into a new directory, old one evicted
-    (the session_index_dir round-8 staleness contract, held across
-    sessions)."""
-    from data_framework_spark.sources.formats import persistent_index_dir
+    the fingerprint → rebuild into a new directory, old one evicted,
+    and get_index_dir follows the rebuild (the round-8 staleness
+    contract: within a session and across sessions)."""
+    from data_framework_spark.sources.formats import (
+        get_index_dir,
+        persistent_index_dir,
+    )
 
     sf = tmp_path / "sf"
     sf.mkdir()
@@ -111,6 +117,12 @@ def test_persistent_index_source_rewrite_rebuilds(spark, cache_root, tmp_path):
         spark, str(sf), "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1},
     )
+    p1b = persistent_index_dir(
+        spark, str(sf), "r14unit_", lambda p: builds.append(p),
+        params={"fmt": 1},
+    )
+    assert p1b == p1 and len(builds) == 1  # build-once while unchanged
+    assert get_index_dir(spark, str(sf), "r14unit_") == p1
     f.write_bytes(b"v2-bytes-longer")
     p2 = persistent_index_dir(
         spark, str(sf), "r14unit_", lambda p: builds.append(p),
@@ -118,6 +130,7 @@ def test_persistent_index_source_rewrite_rebuilds(spark, cache_root, tmp_path):
     )
     assert p2 != p1 and len(builds) == 2
     assert not os.path.exists(p1)
+    assert get_index_dir(spark, str(sf), "r14unit_") == p2
 
 
 def test_persistent_index_corrupt_manifest_rebuilds(spark, cache_root):
@@ -132,7 +145,7 @@ def test_persistent_index_corrupt_manifest_rebuilds(spark, cache_root):
     )
     with open(os.path.join(p1, "manifest.json"), "w") as fh:
         fh.write("{not json")
-    _forget_session_entries("r14unit_")
+    _forget_session_entries()
     p2 = persistent_index_dir(
         spark, SF_SMALL, "r14unit_", lambda p: builds.append(p),
         params={"fmt": 1},
@@ -146,14 +159,11 @@ def test_ivfpq_reload_path_matches_build_path(spark, cache_root):
     from a RELOADED persistent index (fresh-session simulation) must
     return exactly the rows the building session returned — the
     hashes-can-never-change property of reload-not-retrain."""
-    from data_framework_spark.similarity.ivfpq import (
-        IVFPQ_INDEX_PREFIX,
-        q_ivfpq_persist_topk,
-    )
+    from data_framework_spark.similarity.ivfpq import q_ivfpq_persist_topk
 
     built = [tuple(r) for r in q_ivfpq_persist_topk(spark, SF_SMALL).collect()]
     assert built
-    _forget_session_entries(IVFPQ_INDEX_PREFIX)
+    _forget_session_entries()
     reloaded = [
         tuple(r) for r in q_ivfpq_persist_topk(spark, SF_SMALL).collect()
     ]
@@ -171,7 +181,7 @@ def test_ivfpq_stale_cache_unreachable_after_fmt_bump(spark, cache_root, monkeyp
     ivfpq.q_ivfpq_persist_topk(spark, SF_SMALL).collect()
     p1 = get_index_dir(spark, SF_SMALL, ivfpq.IVFPQ_INDEX_PREFIX)
     assert p1 is not None
-    _forget_session_entries(ivfpq.IVFPQ_INDEX_PREFIX)
+    _forget_session_entries()
     monkeypatch.setattr(ivfpq, "IVFPQ_INDEX_FMT", ivfpq.IVFPQ_INDEX_FMT + 1)
     p2 = ivfpq.session_ivfpq_index(spark, SF_SMALL)
     assert p2 != p1
@@ -406,10 +416,10 @@ def test_pq_books_persist_and_reload_bitwise(spark, cache_root):
     from data_framework_spark.similarity import pq
     from data_framework_spark.sources.tables import load_table
 
-    pq._BOOKS_CACHE.clear()
+    cache.invalidate("pq_books")
     emb = load_table(spark, SF_SMALL, "embeddings")
     b1 = pq.trained_codebooks(emb)
-    pq._BOOKS_CACHE.clear()
+    cache.invalidate("pq_books")
     import time
 
     t0 = time.perf_counter()
@@ -426,7 +436,7 @@ def test_pq_books_fmt_bump_diverges(spark, cache_root, monkeypatch):
     from data_framework_spark.similarity import pq
     from data_framework_spark.sources.tables import load_table
 
-    pq._BOOKS_CACHE.clear()
+    cache.invalidate("pq_books")
     emb = load_table(spark, SF_SMALL, "embeddings")
     pq.trained_codebooks(emb)
     import glob
@@ -434,7 +444,7 @@ def test_pq_books_fmt_bump_diverges(spark, cache_root, monkeypatch):
 
     files = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
     assert len(files) == 1
-    pq._BOOKS_CACHE.clear()
+    cache.invalidate("pq_books")
     monkeypatch.setattr(pq, "PQ_BOOKS_FMT", pq.PQ_BOOKS_FMT + 1)
     pq.trained_codebooks(emb)
     files2 = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))

@@ -16,27 +16,19 @@ import textwrap
 
 import pytest
 
+from data_framework_spark import cache
 from tests.conftest import SF_SMALL
 
 
 @pytest.fixture()
 def cache_root(tmp_path, monkeypatch):
-    """Throwaway persistent-cache root + cleared session registry for
-    the unit prefixes (the test_round14 convention)."""
-    from data_framework_spark.sources import formats
-
+    """Throwaway persistent-cache root + cleared session registry of
+    index dirs (the test_round14 convention)."""
     root = tmp_path / "index_cache"
-    monkeypatch.setenv(formats.INDEX_CACHE_ENV, str(root))
-    _forget("r15unit_")
+    monkeypatch.setenv(cache.INDEX_CACHE_ENV, str(root))
+    cache.invalidate("index_dir")
     yield str(root)
-    _forget("r15unit_")
-
-
-def _forget(prefix: str) -> None:
-    from data_framework_spark.sources.formats import _INDEX_DIRS
-
-    for k in [k for k in _INDEX_DIRS if k[2] == prefix]:
-        del _INDEX_DIRS[k]
+    cache.invalidate("index_dir")
 
 
 def _import_temp_module(path: str, name: str):
@@ -96,7 +88,7 @@ def test_forgotten_fmt_bump_cannot_serve_stale_index(
     assert open(os.path.join(d1, "payload.txt")).read() == "1"
 
     # 'new session' running EDITED build code with the same params
-    _forget("r15unit_")
+    cache.invalidate("index_dir")
     p.write_text(_BUILD_MODULE_SRC.format(scale=2))
     new = _import_temp_module(str(p), "r15_fmt_mod_v2")
     d2 = persistent_index_dir(spark, SF_SMALL, "r15unit_", new.build, params)
@@ -147,13 +139,13 @@ def test_plan_fp_failure_degrades_to_retrain_only(
     from data_framework_spark.sources.tables import load_table
 
     monkeypatch.setattr(pq, "_stable_plan_fp", lambda df: None)
-    pq._BOOKS_CACHE.clear()
+    cache.invalidate("pq_books")
     emb = load_table(spark, SF_SMALL, "embeddings")
     books = pq.trained_codebooks(emb)
     assert books is not None
     persisted = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
     assert persisted == []  # nothing persisted under a degraded key
-    pq._BOOKS_CACHE.clear()
+    cache.invalidate("pq_books")
 
 
 # --- hier-vs-sharded auto routing (r14 verdict ask 5) -------------------------
@@ -364,9 +356,9 @@ def test_legacy_pq_books_files_are_swept(spark, cache_root):
     os.makedirs(cache_root, exist_ok=True)
     legacy = os.path.join(cache_root, "pq_books_deadbeef00_feedface.npy")
     np.save(legacy, np.zeros((2, 2)))
-    pq._BOOKS_CACHE.clear()
+    cache.invalidate("pq_books")
     emb = load_table(spark, SF_SMALL, "embeddings")
     pq.trained_codebooks(emb)  # trains and persists under pq_books2_
-    pq._BOOKS_CACHE.clear()
+    cache.invalidate("pq_books")
     assert not os.path.exists(legacy)
     assert glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))

@@ -167,8 +167,11 @@ class TestFunnelOnePass:
 
 
 class TestPagerankSmallGraphRoute:
-    @pytest.mark.slow  # r18: forces the distributed route at sf0.01
-    @pytest.mark.parametrize("sf", [SF001, SF01])
+    @pytest.mark.parametrize(
+        "sf",
+        # only the sf0.01 case is slow: it forces the distributed route
+        [SF001, pytest.param(SF01, marks=pytest.mark.slow)],
+    )
     def test_driver_route_equals_distributed_route(self, spark, sf):
         """The r17 driver-side rank iteration (PR_SMALL_GRAPH_EDGES
         bounded collect) must return EXACTLY the distributed

@@ -95,19 +95,19 @@ def test_lang_id_nd_barrier_preserves_values(spark):
 
 
 def test_funnel_scratch_tracked_and_released(spark, sf_dir):
+    from data_framework_spark import cache
     from data_framework_spark.functions.corpus import (
-        _FUNNEL_SCRATCH,
         q_curation_funnel,
         release_funnel_scratch,
     )
 
     release_funnel_scratch()
     q_curation_funnel(spark, sf_dir).collect()
-    assert len(_FUNNEL_SCRATCH) == 1
-    (df,) = _FUNNEL_SCRATCH.values()
+    assert len(cache.entries("funnel")) == 1
+    (df,) = cache.entries("funnel")
     assert df.storageLevel.useMemory  # actually persisted
     release_funnel_scratch()
-    assert not _FUNNEL_SCRATCH
+    assert not cache.entries("funnel")
     assert not df.storageLevel.useMemory  # actually unpersisted
 
 
@@ -126,27 +126,14 @@ def test_funnel_mat_matches_default(spark, sf_dir):
 
 
 def test_evict_route_forces_reexecution(spark, sf_dir):
-    from data_framework_spark.similarity.ann import (
-        _ROUTE_CACHE,
-        evict_route,
-        q_cosine_topk,
-    )
-
-    from data_framework_spark.sources.formats import _sf_fingerprint
+    from data_framework_spark import cache
+    from data_framework_spark.similarity.ann import evict_route, q_cosine_topk
 
     df1 = q_cosine_topk(spark, sf_dir)
-    from data_framework_spark.sources.formats import _index_cache_root
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        _sf_fingerprint(sf_dir),
-        "cosine_topk",
-        _index_cache_root(),
-    )
-    assert key in _ROUTE_CACHE
+    key = ("cosine_topk", cache._index_cache_root())
+    assert cache.peek(spark, "route", sf_dir, key) is df1
     evict_route(spark, sf_dir, "cosine_topk")
-    assert key not in _ROUTE_CACHE
+    assert cache.peek(spark, "route", sf_dir, key) is None
     assert not df1.storageLevel.useMemory  # unpersisted on eviction
     df2 = q_cosine_topk(spark, sf_dir)
     assert df2 is not df1  # rebuilt, not a dict hit

@@ -1,14 +1,11 @@
 """Round-9 changes: widen_scan positive-allowlist guard, the
-session-index source fingerprint, the shuffle-free _shingles form,
-and the written-order ADC fold.
+shuffle-free _shingles form, and the written-order ADC fold.
 """
 
 from __future__ import annotations
 
 import pytest
 
-import os
-import shutil
 import time
 
 from pyspark.sql import functions as F
@@ -35,42 +32,6 @@ def test_widen_scan_noops_on_dedup_and_distinct(spark):
     n = spark.sparkContext.defaultParallelism
     fp = docs.filter(F.col("doc_id") < 100).select("doc_id", "text")
     assert widen_scan(fp).rdd.getNumPartitions() == n
-
-
-# --- session_index_dir: source-data fingerprint -----------------------------
-
-
-def test_session_index_dir_rebuilds_on_source_rewrite(spark, tmp_path):
-    """Rewriting the data under sf_dir within a session must
-    invalidate the cached index entry (round-8 advisory: the stale
-    entry produced wrong-but-plausible BM25/IVF results for callers
-    reusing a directory)."""
-    from data_framework_spark.sources.formats import (
-        get_index_dir,
-        session_index_dir,
-    )
-
-    sf = str(tmp_path / "sfx")
-    os.makedirs(sf)
-    shutil.copy(
-        os.path.join(SF_SMALL, "region.parquet"),
-        os.path.join(sf, "region.parquet"),
-    )
-    builds = []
-    p1 = session_index_dir(spark, sf, "fp_idx_", lambda p: builds.append(p))
-    p1b = session_index_dir(spark, sf, "fp_idx_", lambda p: builds.append(p))
-    assert p1 == p1b and len(builds) == 1  # build-once while unchanged
-    assert get_index_dir(spark, sf, "fp_idx_") == p1
-    # rewrite the source: copy again with a bumped mtime
-    time.sleep(0.01)
-    shutil.copy(
-        os.path.join(SF_SMALL, "nation.parquet"),
-        os.path.join(sf, "region.parquet"),
-    )
-    os.utime(os.path.join(sf, "region.parquet"))
-    p2 = session_index_dir(spark, sf, "fp_idx_", lambda p: builds.append(p))
-    assert len(builds) == 2 and p2 != p1
-    assert get_index_dir(spark, sf, "fp_idx_") == p2
 
 
 # --- _shingles: shuffle-free form -------------------------------------------
@@ -487,7 +448,7 @@ def test_bpe_merge_cache_reuses_and_invalidates(spark, tmp_path, monkeypatch):
     """The merge table is a train-once artifact: within a session the
     four BPE queries must share one training run per (corpus content,
     split), and a rewrite of the data under sf_dir must retrain (the
-    same fingerprint-keyed contract as session_index_dir)."""
+    fingerprint-keyed contract of cache.get_or_build)."""
     import os
     import time
 
