@@ -4,7 +4,7 @@ index directories, chunk directories, persisted frames — lives here.
 
 An entry is keyed on (applicationId, family, sf_dir, fingerprint of
 sf_dir, key): `family` names the artifact kind, `key` is whatever else
-the artifact depends on (route name, knobs, plan hash). The fingerprint
+the artifact depends on (route name, knobs). The fingerprint
 makes a mid-session rewrite of the data under sf_dir a miss, and the
 first miss after a rewrite calls each superseded entry's `release`
 (`unpersist` for frames, `rmtree` for scratch dirs) so stale artifacts
@@ -13,9 +13,10 @@ neither serve nor pin memory. Entries of stopped sessions are dropped
 sf_dir is None is not tied to a data directory; the code that rewrites
 what it caches calls `invalidate` (invalidate-on-write).
 
-`clear()` releases everything — the test/bench hook. The on-disk index
-cache (manifests, per-prefix locks, atomic publish) stays with its
-builders in sources/formats.py; only its in-process registry is here.
+`clear()` releases everything — the test/bench hook. The one on-disk
+artifact layer is sources/formats.py::persistent_index_dir (manifests,
+per-prefix locks, atomic publish), which the indexes and the trained PQ
+codebooks persist through; only its in-process registry is here.
 """
 
 from __future__ import annotations

@@ -86,9 +86,27 @@ def ensure_session_conventions(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _resources() -> tuple[str, str]:
+    """(cpus, driver memory) for get_spark: SPARK_GRAFT_CPUS and
+    SPARK_GRAFT_DRIVER_MEM when set, else sized to this host — the CPUs
+    this process may run on, and half the physical memory, capped at
+    24g, for the driver JVM (in local mode it also runs every task)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus is None:
+        if hasattr(os, "sched_getaffinity"):
+            cpus = str(len(os.sched_getaffinity(0)))
+        else:
+            cpus = str(os.cpu_count() or 1)
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem is None:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        mem = f"{min(phys_mb // 2, 24 * 1024)}m"
+    return cpus, mem
+
+
 def get_spark(app_name: str = "data_framework_spark") -> SparkSession:
     """Build (or reuse) the engine's SparkSession."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, mem = _resources()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -96,16 +114,10 @@ def get_spark(app_name: str = "data_framework_spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # The test data's events.ts is parquet TIMESTAMP(NANOS), which
-        # Spark refuses by default; read it as long and convert in the
-        # table loader (sources/tables.py) — DuckDB truncates ns→µs the
-        # same way.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     # apply the full runtime convention set at build time too, so a
     # get_spark() session satisfies every convention even on code

@@ -38,6 +38,7 @@ Arrow-batched pass.
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import numpy as np
@@ -95,182 +96,54 @@ def _codebooks(emb: DataFrame) -> np.ndarray:
     )
 
 
-def trained_codebooks(emb: DataFrame) -> np.ndarray:
-    """Lloyd-trained codebooks: the sampled seeds refined by
-    train.BOOK_ROUNDS of per-subspace fixed-point k-means over the raw
-    corpus (bit-identical to the oracle's unrolled CTEs). One training
-    run per (session, corpus content) is shared by q_pq_codes and
-    q_pq_adc_topk (the codebook IS a build artifact): session-cached
-    (cache.py, family "pq_books") on the source file's fingerprint and
-    the analyzed plan's semantic hash. inputFiles() alone is identical
-    for ANY frame derived from the same file, so a filtered/projected
-    view would silently serve — or poison — full-corpus codebooks; the
-    semanticHash term makes derived frames distinct cache entries while
-    the registry's identical `load_table` plans still share one
-    training run. Multi-file and non-file frames retrain every call."""
-    from urllib.parse import urlparse
+#: Bump on any training-semantics change the digest params below don't
+#: capture — a persisted pre-change codebook must be unreachable.
+PQ_BOOKS_FMT = 1
+PQ_BOOKS_PREFIX = "pq_codebooks_"
 
-    files = emb.inputFiles()
-    if len(files) != 1:
-        return _train_books(emb)
-    local = urlparse(files[0]).path or files[0]
-    return cache.get_or_build(
-        emb.sparkSession, "pq_books", local, emb.semanticHash(),
-        lambda: _reload_or_train_books(emb, local),
+
+def trained_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
+    """Lloyd-trained codebooks of sf_dir's embeddings: the sampled seeds
+    refined by train.BOOK_ROUNDS of per-subspace fixed-point k-means
+    (bit-identical to the oracle's unrolled CTEs). The codebook is a
+    build artifact shared by q_pq_codes, q_pq_adc_topk and
+    q_pq_train_gain: trained at most once across sessions through
+    formats.persistent_index_dir (keyed on sf_dir's fingerprint, the
+    training knobs and the trainer's source), then held in the session
+    cache, so a warm call costs one fingerprint walk of sf_dir."""
+    from data_framework_spark.similarity import train
+    from data_framework_spark.sources.formats import (
+        build_source_fp,
+        persistent_index_dir,
     )
+
+    def build(path: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        np.save(os.path.join(path, "books.npy"), _train_books(emb))
+
+    def load() -> np.ndarray:
+        path = persistent_index_dir(
+            spark,
+            sf_dir,
+            PQ_BOOKS_PREFIX,
+            build,
+            params={
+                "fmt": PQ_BOOKS_FMT,
+                "pq_m": PQ_M,
+                "pq_k": PQ_K,
+                "book_rounds": train.BOOK_ROUNDS,
+                "train_src": build_source_fp(train),
+            },
+        )
+        return np.load(os.path.join(path, "books.npy"))
+
+    return cache.get_or_build(spark, "pq_books", sf_dir, None, load)
 
 
 def _train_books(emb: DataFrame) -> np.ndarray:
     from data_framework_spark.similarity.train import lloyd_subspace_books
 
     return lloyd_subspace_books(emb, "embedding", _codebooks(emb))
-
-
-def _reload_or_train_books(emb: DataFrame, local: str) -> np.ndarray:
-    """The codebook persisted by a previous session for this exact
-    (source stamp, plan), else a fresh training run persisted for the
-    next one. A vanished source file retrains without persisting."""
-    import os
-
-    try:
-        st = os.stat(local)
-    except OSError:
-        return _train_books(emb)
-    stamp = (st.st_mtime_ns, st.st_size)
-    plan_fp = _stable_plan_fp(emb)
-    if plan_fp is None:
-        return _train_books(emb)
-    got = _load_persisted_books(local, stamp, plan_fp)
-    if got is None:
-        got = _train_books(emb)
-        _persist_books(local, stamp, plan_fp, got)
-    return got
-
-
-def _stable_plan_fp(df: DataFrame) -> str | None:
-    """Cross-SESSION plan fingerprint: the analyzed logical plan's
-    string with exprIds (#NNN — fresh per session) stripped, hashed.
-    semanticHash() serves the SESSION cache (it is what the round-10
-    advisory demanded — a filtered/projected view must never be
-    served full-corpus codebooks) but embeds exprIds, so it differs
-    across sessions for the identical plan; the stripped-plan hash
-    keeps the same derived-frame-distinctness property (a filter or
-    projection changes the plan TEXT) while being stable across
-    sessions. A JVM/py4j hiccup returns None and the caller skips
-    BOTH persisted-load and persist (retrain-only) — a shared
-    fallback token would let two DIFFERENT frames over the same
-    source file cross-serve each other's books (r14 advisory)."""
-    import hashlib
-    import re
-
-    try:
-        s = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return None
-    return hashlib.sha256(re.sub(r"#\d+", "#", s).encode()).hexdigest()[:20]
-
-
-#: Bump on any training-semantics change the digest knobs below don't
-#: capture — a persisted pre-change codebook must be unreachable.
-PQ_BOOKS_FMT = 1
-
-
-def _books_digests(local: str, stamp: tuple, plan_fp: str) -> tuple[str, str]:
-    """(path-digest, content-digest) for the cross-session codebook
-    file: the path digest groups all stamps of one (source file, plan)
-    pair (so a source rewrite evicts its superseded codebooks without
-    two distinct plans over the same file thrashing each other's
-    persisted books — r14 advisory), the content digest keys the
-    exact (stamp, plan, knobs, build-code) the training consumed."""
-    import hashlib
-    import json
-    import sys
-
-    from data_framework_spark.similarity import train
-    from data_framework_spark.sources.formats import build_source_fp
-
-    pd_ = hashlib.sha256(f"{local}\x00{plan_fp}".encode()).hexdigest()[:10]
-    cd = hashlib.sha256(
-        json.dumps(
-            {
-                "local": local,
-                "stamp": list(stamp),
-                "plan_fp": plan_fp,
-                "fmt": PQ_BOOKS_FMT,
-                "pq_m": PQ_M,
-                "pq_k": PQ_K,
-                "book_rounds": train.BOOK_ROUNDS,
-                # source hash of this module + the Lloyd trainer: a
-                # build-code change diverges the key even when
-                # PQ_BOOKS_FMT is forgotten (r14 verdict ask 3)
-                "build_src": build_source_fp(sys.modules[__name__], train),
-            },
-            sort_keys=True,
-        ).encode()
-    ).hexdigest()[:20]
-    return pd_, cd
-
-
-def _load_persisted_books(
-    local: str, stamp: tuple, plan_fp: str
-) -> np.ndarray | None:
-    """Reload the trained codebook persisted by a previous session
-    (r14, the ivfpq persistent-index precedent: the codebook is a
-    build artifact — retraining it per session is the cold cost the
-    r13 verdict flagged on pq_adc_topk). Any read problem means
-    retrain, never a wrong codebook (the digest filename pins the
-    exact source stamp + plan + training knobs)."""
-    import os
-
-    pd_, cd = _books_digests(local, stamp, plan_fp)
-    path = os.path.join(
-        cache._index_cache_root(), f"pq_books2_{pd_}_{cd}.npy"
-    )
-    try:
-        books = np.load(path)
-    except (OSError, ValueError):
-        return None
-    if books.ndim != 3 or books.shape[0] != PQ_M or books.shape[2] != _SUB:
-        return None
-    return books
-
-
-def _persist_books(
-    local: str, stamp: tuple, plan_fp: str, books: np.ndarray
-) -> None:
-    """Persist the trained codebook for cross-session reload, evicting
-    superseded stamps of the same source file (one live codebook per
-    (source file, plan) — the persistent_index_dir eviction
-    convention). Atomic tmp+rename publication; a failed persist is
-    non-fatal (the session cache still serves this process)."""
-    import glob
-    import os
-
-    pd_, cd = _books_digests(local, stamp, plan_fp)
-    root = cache._index_cache_root()
-    try:
-        os.makedirs(root, exist_ok=True)
-        final = os.path.join(root, f"pq_books2_{pd_}_{cd}.npy")
-        # evict superseded stamps of this (file, plan) group, plus any
-        # legacy pre-r15 "pq_books_" files — the old per-file path
-        # scheme no longer matches any loader path, so without this
-        # sweep they would sit orphaned in the cache root forever
-        # (r15 review)
-        stale = glob.glob(
-            os.path.join(root, f"pq_books2_{pd_}_*.npy")
-        ) + glob.glob(os.path.join(root, "pq_books_*.npy"))
-        for old in stale:
-            if old != final:
-                try:
-                    os.remove(old)
-                except OSError:
-                    pass
-        tmp = f"{final}.tmp-{os.getpid()}"
-        with open(tmp, "wb") as fh:
-            np.save(fh, books)
-        os.replace(tmp, final)
-    except OSError:
-        pass
 
 
 def _round9(x: np.ndarray) -> np.ndarray:
@@ -336,7 +209,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the TRAINED codebooks (the training is part of what the
     oracle hash certifies)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    books = trained_codebooks(emb)
+    books = trained_codebooks(spark, sf_dir)
     return (
         assign_pq_codes(emb, books)
         .groupBy("subspace", "code")
@@ -380,7 +253,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered corpus. The oracle-checked contract here is the ADC
     *plan* (codes-only scan, broadcast LUTs), not a recall claim."""
     emb = load_table(spark, sf_dir, "embeddings")
-    books = trained_codebooks(emb)
+    books = trained_codebooks(spark, sf_dir)
     q_rows = (
         emb.filter(F.col("vec_id") < 20)
         .select("vec_id", "embedding")
@@ -517,7 +390,7 @@ def q_pq_train_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     means = {}
     for regime, books in (
         ("seed", _codebooks(emb)),
-        ("trained", trained_codebooks(emb)),
+        ("trained", trained_codebooks(spark, sf_dir)),
     ):
         val = (
             assign_pq_codes(emb, books)

@@ -313,7 +313,7 @@ def test_trained_codebooks_cut_quantization_error(spark, sf_dir):
         assign_pq_codes(emb, _codebooks(emb)).agg(F.avg("err")).collect()[0][0]
     )
     trained_err = (
-        assign_pq_codes(emb, trained_codebooks(emb))
+        assign_pq_codes(emb, trained_codebooks(spark, sf_dir))
         .agg(F.avg("err"))
         .collect()[0][0]
     )
@@ -358,7 +358,7 @@ def test_bpe_batched_merges_properties(spark, sf_dir):
     assert fwd == rev
 
 
-def test_trained_codebooks_session_cache(spark, sf_dir, tmp_path):
+def test_trained_codebooks_session_cache(spark, sf_dir, tmp_path, monkeypatch):
     """One training run per (session, corpus content): the second call
     is a dict hit; rewriting the source file retrains."""
     import shutil
@@ -367,18 +367,17 @@ def test_trained_codebooks_session_cache(spark, sf_dir, tmp_path):
 
     from data_framework_spark import cache
     from data_framework_spark.similarity.pq import trained_codebooks
-    from data_framework_spark.sources.tables import load_table
 
+    monkeypatch.setenv(cache.INDEX_CACHE_ENV, str(tmp_path / "index_cache"))
     work = tmp_path / "sf"
     shutil.copytree(sf_dir, work)
-    emb = load_table(spark, str(work), "embeddings")
     before = len(cache.entries("pq_books"))
-    b1 = trained_codebooks(emb)
+    b1 = trained_codebooks(spark, str(work))
     assert len(cache.entries("pq_books")) == before + 1
-    b2 = trained_codebooks(load_table(spark, str(work), "embeddings"))
+    b2 = trained_codebooks(spark, str(work))
     assert b2 is b1  # dict hit, not a retrain
     os.utime(work / "embeddings.parquet")  # mtime bump = rewrite signal
-    b3 = trained_codebooks(load_table(spark, str(work), "embeddings"))
+    b3 = trained_codebooks(spark, str(work))
     assert b3 is not b1  # stamp changed -> retrained
     assert np.array_equal(b3, b1)  # same content, same training
 

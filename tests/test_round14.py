@@ -406,50 +406,49 @@ def test_refine_r_sql_matches_python_policy():
 # --- cross-session PQ codebook persistence (r13 verdict, pq_adc cold) ---------
 
 
-def test_pq_books_persist_and_reload_bitwise(spark, cache_root):
+def test_pq_books_persist_and_reload_bitwise(spark, cache_root, monkeypatch):
     """trained_codebooks persisted by one 'session' must be reloaded
-    BITWISE by the next (cleared session cache), and a filtered view
-    must never be served the full-corpus books (the round-10 advisory,
-    held across sessions by the stripped-plan fingerprint)."""
+    BITWISE by the next (cleared session cache) without retraining,
+    from one persistent_index_dir tree: a codebook directory with a
+    manifest, no loose .npy files in the cache root."""
+    import glob
+
     import numpy as np
 
     from data_framework_spark.similarity import pq
-    from data_framework_spark.sources.tables import load_table
 
     cache.invalidate("pq_books")
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    b1 = pq.trained_codebooks(emb)
+    b1 = pq.trained_codebooks(spark, SF_SMALL)
     cache.invalidate("pq_books")
-    import time
-
-    t0 = time.perf_counter()
-    b2 = pq.trained_codebooks(emb)
-    reload_s = time.perf_counter() - t0
+    _forget_session_entries()
+    trained = []
+    monkeypatch.setattr(pq, "_train_books", lambda emb: trained.append(emb))
+    b2 = pq.trained_codebooks(spark, SF_SMALL)
+    assert trained == []  # reload, not retrain
     assert np.array_equal(b1, b2)
-    assert reload_s < 2.0  # reload, not retrain (train is >>2 s)
-    # distinct plan -> distinct digest -> no cross-serving
-    filt = emb.filter("vec_id < 300")
-    assert pq._stable_plan_fp(filt) != pq._stable_plan_fp(emb)
+    dirs = [d for d in os.listdir(cache_root) if d.startswith(pq.PQ_BOOKS_PREFIX)]
+    assert len(dirs) == 1
+    assert os.path.isfile(os.path.join(cache_root, dirs[0], "manifest.json"))
+    assert glob.glob(os.path.join(cache_root, "*.npy")) == []
+    cache.invalidate("pq_books")
 
 
 def test_pq_books_fmt_bump_diverges(spark, cache_root, monkeypatch):
     from data_framework_spark.similarity import pq
-    from data_framework_spark.sources.tables import load_table
+    from data_framework_spark.sources.formats import get_index_dir
 
     cache.invalidate("pq_books")
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    pq.trained_codebooks(emb)
-    import glob
-    import os
-
-    files = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
-    assert len(files) == 1
+    pq.trained_codebooks(spark, SF_SMALL)
+    d1 = get_index_dir(spark, SF_SMALL, pq.PQ_BOOKS_PREFIX)
     cache.invalidate("pq_books")
     monkeypatch.setattr(pq, "PQ_BOOKS_FMT", pq.PQ_BOOKS_FMT + 1)
-    pq.trained_codebooks(emb)
-    files2 = glob.glob(os.path.join(cache_root, "pq_books2_*.npy"))
-    # same path-digest -> superseded file evicted, one live codebook
-    assert len(files2) == 1 and files2 != files
+    pq.trained_codebooks(spark, SF_SMALL)
+    d2 = get_index_dir(spark, SF_SMALL, pq.PQ_BOOKS_PREFIX)
+    assert d1 is not None and d2 != d1
+    # same (prefix, sf_dir) -> superseded tree evicted, one live codebook
+    live = [d for d in os.listdir(cache_root) if d.startswith(pq.PQ_BOOKS_PREFIX)]
+    assert live == [os.path.basename(d2)]
+    cache.invalidate("pq_books")
 
 
 @pytest.mark.slow  # r18: >10 s; slow lane (see pytest.ini)
