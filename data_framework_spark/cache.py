@@ -1,10 +1,13 @@
 """The one in-process cache: every build artifact a session reuses
-across its queries — route results, PQ codebooks, BPE merge tables,
-index directories, chunk directories, persisted frames — lives here.
+across its queries — table schemas, route results, PQ codebooks, BPE
+merge tables, index directories, chunk directories, persisted frames —
+lives here.
 
 An entry is keyed on (applicationId, family, sf_dir, fingerprint of
 sf_dir, key): `family` names the artifact kind, `key` is whatever else
-the artifact depends on (route name, knobs). The fingerprint
+the artifact depends on (route name, knobs). sf_dir may also be one
+file (a table schema is keyed on its table's file, so a hit stats only
+that file). The fingerprint
 makes a mid-session rewrite of the data under sf_dir a miss, and the
 first miss after a rewrite calls each superseded entry's `release`
 (`unpersist` for frames, `rmtree` for scratch dirs) so stale artifacts

@@ -20,7 +20,8 @@ Surface parity:
   recorded in SURVEY.md §2.4);
 - `export` / `restore` implement the reference's own TODO (hdf5 file
   support "not yet supported", dataset.py:66-70, :183-193) as
-  partitioned parquet + a JSON params sidecar.
+  partitioned parquet + a JSON sidecar (`_dataset.json`) holding the
+  params and each variable's ndim, directory and schema.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from collections.abc import Sequence
 import numpy as np
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 from data_framework_spark.variable import SparkVariable
 
@@ -139,7 +141,13 @@ class SparkDataset:
             # json either way.
             safe = quote(label, safe="")
             v.df.write.mode("overwrite").parquet(os.path.join(path, f"var_{safe}"))
-            meta["variables"][label] = {"ndim": v.ndim, "dir": f"var_{safe}"}
+            # the recorded schema lets restore() read without inferring
+            # it from the files (a footer-reading job per variable)
+            meta["variables"][label] = {
+                "ndim": v.ndim,
+                "dir": f"var_{safe}",
+                "schema": v.df.schema.jsonValue(),
+            }
         with open(os.path.join(path, "_dataset.json"), "w") as f:
             json.dump(meta, f)
 
@@ -149,6 +157,11 @@ class SparkDataset:
             meta = json.load(f)
         variables = {}
         for label, info in meta["variables"].items():
-            df = spark.read.parquet(os.path.join(path, info["dir"]))
+            reader = spark.read
+            # a manifest without "schema" predates recorded schemas:
+            # infer it from the files
+            if "schema" in info:
+                reader = reader.schema(StructType.fromJson(info["schema"]))
+            df = reader.parquet(os.path.join(path, info["dir"]))
             variables[label] = SparkVariable(label, df, info["ndim"])
         return cls(variables, meta["params"])

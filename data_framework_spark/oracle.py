@@ -8,6 +8,7 @@ so hash mismatches surface during development, not at round end.
 
 from __future__ import annotations
 
+import hashlib
 import math
 from datetime import date, datetime
 from decimal import Decimal
@@ -60,12 +61,15 @@ def _digest(rows: list[tuple], colnames: list[str]) -> int:
     (a wrongly duplicated row plus a dropped one) XOR to the same
     value at equal row counts — a false green (round-9 review).
     Under summation a multiset collision requires equal row-hash
-    sums, not mere pairing."""
+    sums, not mere pairing. Rows hash with 64-bit blake2b, not the
+    per-process salted `hash()`, so a digest is the same in every
+    process and can be stored and compared across runs."""
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
     acc = 0
     for row in rows:
         key = "|".join(_norm(row[i]) for i in order)
-        acc = (acc + hash(key)) % (1 << 64)
+        h = hashlib.blake2b(key.encode(), digest_size=8).digest()
+        acc = (acc + int.from_bytes(h, "little")) % (1 << 64)
     return acc
 
 

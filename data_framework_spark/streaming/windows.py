@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_framework_spark.sources.tables import load_table
+from data_framework_spark.sources.tables import load_table, normalize_ts, raw_schema
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -90,23 +90,16 @@ def stream_tumbling_counts(
 
     from data_framework_spark.session import ensure_session_conventions
 
-    # pin nanosAsLong + UTC before the raw-schema probe: on a
-    # TIMESTAMP(NANOS)-generation file under a fresh vanilla session
-    # the probe itself would otherwise throw PARQUET_TYPE_ILLEGAL
     ensure_session_conventions(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    # use the ON-DISK schema (bigint-nanos or TIMESTAMP_NTZ depending
-    # on driver generation), not load_table's converted one — a
-    # readStream schema that disagrees with the files mis-reads
-    # silently
-    raw_schema = spark.read.parquet(path).schema
+    # the ON-DISK schema, not load_table's converted one — a readStream
+    # schema that disagrees with the files mis-reads silently
+    schema = raw_schema(spark, sf_dir, "events")
     # the file stream source requires a directory/glob, not a bare
     # file path — a trailing glob makes the single test file listable
-    stream = spark.readStream.schema(raw_schema).parquet(path + "*")
+    path = os.path.join(sf_dir, "events.parquet")
+    stream = spark.readStream.schema(schema).parquet(path + "*")
     # normalize ts to TIMESTAMP identically to the batch path
     # (watermarks require TIMESTAMP, not NTZ)
-    from data_framework_spark.sources.tables import normalize_ts
-
     stream = normalize_ts(spark, stream)
     return tumbling_counts(stream.withWatermark("ts", "10 minutes"), width)
 

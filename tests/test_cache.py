@@ -1,6 +1,7 @@
 """The session cache (data_framework_spark/cache.py): invalidate-on-write
-for the ivfpq index components, release of superseded entries, and the
-guard that keeps every in-process cache in that one module."""
+for the ivfpq index components, release of superseded entries, table
+schema reuse in load_table, and the guard that keeps every in-process
+cache in that one module."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import pathlib
 from pyspark.sql import functions as F
 
 from data_framework_spark import cache
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_started
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "data_framework_spark"
 _CONTAINERS = (ast.Dict, ast.List, ast.Set, ast.DictComp, ast.ListComp, ast.SetComp)
@@ -144,3 +145,41 @@ def test_ivfpq_rewrite_at_same_path_serves_fresh_components(spark, tmp_path):
     cache.invalidate("ivfpq_index")
     assert ivfpq_topk_from_index(spark, path, queries).collect() == second
     assert second != first
+
+
+def test_load_table_reuses_schema_and_sees_rewrites(spark, tmp_path):
+    """The table schema is inferred once per session and file state:
+    a repeat load starts no Spark job, two loads still self-join
+    (fresh attribute ids), and a rewrite with a new column is seen."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_framework_spark.sources.tables import load_table
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    path = sf / "documents.parquet"
+    shutil.copy(os.path.join(SF_SMALL, "documents.parquet"), path)
+
+    first, jobs = jobs_started(
+        spark, "schema_first", lambda: load_table(spark, str(sf), "documents")
+    )
+    assert jobs  # inference runs a job, so the probe can see one
+    second, jobs = jobs_started(
+        spark, "schema_again", lambda: load_table(spark, str(sf), "documents")
+    )
+    assert jobs == []
+    assert second.schema == first.schema
+
+    a, b = first.alias("a"), second.alias("b")
+    joined = a.join(b, a.doc_id == b.doc_id).select(a.doc_id)
+    assert joined.count() == first.count()
+
+    table = pq.read_table(path)
+    table = table.append_column("extra", pa.array([1] * table.num_rows))
+    pq.write_table(table, path)
+    third = load_table(spark, str(sf), "documents")
+    assert "extra" in third.columns
+    assert third.filter(F.col("extra") == 1).count() == table.num_rows

@@ -10,11 +10,14 @@ rules, DynMeshVar raising.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
 from data_framework_spark.dataset import SparkDataset
 from data_framework_spark.variable import SparkVariable, dyn_mesh_var
+from tests.conftest import jobs_started
 
 
 @pytest.fixture(scope="module")
@@ -164,13 +167,33 @@ def test_get_vars_substring(spark, field):
 
 
 def test_export_restore_roundtrip(spark, field, tmp_path):
+    """_dataset.json records each variable's schema, so restore reads
+    without inferring it (no Spark job); a manifest from before that
+    (no "schema" entries) still restores the same data by inference."""
+    import json
+
     var, ts, mesh, data = field
     ds = SparkDataset().add_var(var).add_param("note", "roundtrip")
     path = str(tmp_path / "dset")
     ds.export(path)
-    back = SparkDataset.restore(spark, path)
+    back, jobs = jobs_started(
+        spark, "restore", lambda: SparkDataset.restore(spark, path)
+    )
+    assert jobs == []
     assert back.params == {"note": "roundtrip"}
+    assert back.variables["bx"].df.schema == var.df.schema
     np.testing.assert_allclose(back.variables["bx"].to_numpy(), data)
+
+    manifest = os.path.join(path, "_dataset.json")
+    with open(manifest) as f:
+        meta = json.load(f)
+    for info in meta["variables"].values():
+        del info["schema"]
+    with open(manifest, "w") as f:
+        json.dump(meta, f)
+    legacy = SparkDataset.restore(spark, path)
+    assert legacy.variables["bx"].df.schema == var.df.schema
+    np.testing.assert_allclose(legacy.variables["bx"].to_numpy(), data)
 
 
 def test_dataset_bounds_documented_intent(spark, field):

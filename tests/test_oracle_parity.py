@@ -75,3 +75,35 @@ def test_every_query_returns_rows(spark, sf_dir):
         if q.fn(spark, sf_dir).limit(1).count() == 0:
             empty.append(name)
     assert not empty, f"queries returning 0 rows at sf0.001: {empty}"
+
+
+_DIGEST_IN_CHILD = """
+from datetime import datetime
+from decimal import Decimal
+from data_framework_spark.oracle import _digest
+rows = [(1, "x", 2.5, Decimal("1.10"), datetime(2024, 1, 2, 3, 4, 5)),
+        (2, None, float("nan"), None, None)]
+print(_digest(rows, ["id", "s", "f", "d", "ts"]))
+"""
+
+
+def test_digest_is_stable_across_hash_seeds():
+    """The digest is a stored-comparable value: two processes with
+    differently salted `hash()` compute the same one."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = {
+        subprocess.run(
+            [sys.executable, "-c", _DIGEST_IN_CHILD],
+            cwd=root,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.strip()
+        for seed in ("0", "12345")
+    }
+    assert len(out) == 1, out
